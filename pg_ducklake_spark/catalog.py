@@ -257,6 +257,22 @@ class TableState:
                 col = old
         return col
 
+    def added_at(self, col: str) -> int:
+        """First snapshot at which current logical column ``col``
+        appeared: walk the schema log newest→oldest, following the
+        column through renames (its physical name at each log vintage);
+        the oldest contiguous entry containing it is its add. A
+        DROP-then-re-ADDed name is dated by its own add, not by the
+        dropped column that carried the name before."""
+        added = 0
+        for sid, sj in reversed(self.schema_log):
+            pname = self.physical_name(col, sid)
+            if any(fd["name"] == pname for fd in sj["fields"]):
+                added = sid
+            else:
+                break
+        return added
+
     def schema_at(self, snapshot_id: int) -> T.StructType:
         cur = None
         for sid, sj in self.schema_log:

@@ -1524,24 +1524,13 @@ class Lake:
         state: TableState, schema: T.StructType
     ) -> dict[str, tuple[int, str]]:
         """col -> (snapshot the column first appeared at, initial_default
-        SQL expr) for every schema field carrying an initial_default.
-
-        The add snapshot follows the LOGICAL column (newest→oldest walk
-        through renames), so a re-ADDed name is dated by its own add,
-        not a dropped predecessor's."""
+        SQL expr) for every schema field carrying an initial_default
+        (add snapshot per TableState.added_at)."""
         out: dict[str, tuple[int, str]] = {}
         for f in schema.fields:
             d = (f.metadata or {}).get("initial_default")
-            if d is None:
-                continue
-            add_snap = 0
-            for sid, sj in reversed(state.schema_log):
-                pname = state.physical_name(f.name, sid)
-                if any(fd["name"] == pname for fd in sj["fields"]):
-                    add_snap = sid
-                else:
-                    break
-            out[f.name] = (add_snap, d)
+            if d is not None:
+                out[f.name] = (state.added_at(f.name), d)
         return out
 
     def _read_files(
@@ -1578,24 +1567,7 @@ class Lake:
         # columns they're missing (group count ≤ #ADD COLUMN DEFAULTs + 1,
         # independent of file count) and fill per group.
         current_names = tuple(f.name for f in schema.fields)
-
-        def _added_at(c: str) -> int:
-            # First snapshot at which the current LOGICAL column `c`
-            # appeared: walk the schema log newest→oldest, following
-            # the column through renames (physical name at each log
-            # vintage); the oldest contiguous entry containing it is
-            # its add. Distinguishes a DROP-then-re-ADDed name from
-            # the column that originally carried it.
-            added = 0
-            for sid, sj in reversed(state.schema_log):
-                pname = state.physical_name(c, sid)
-                if any(fd["name"] == pname for fd in sj["fields"]):
-                    added = sid
-                else:
-                    break
-            return added
-
-        add_snaps = {c: _added_at(c) for c in current_names}
+        add_snaps = {c: state.added_at(c) for c in current_names}
         groups: dict[tuple, list[str]] = {}
         for rel in rels:
             bs = state.files[rel].begin_snapshot
@@ -1889,11 +1861,6 @@ class Lake:
             df = df.unionByName(p)
         return df
 
-    def _files_df(
-        self, name: str, state: TableState, schema: T.StructType
-    ) -> DataFrame:
-        return self._read_files(name, state, schema)
-
     def _resolve_version(
         self,
         name: str,
@@ -1970,7 +1937,7 @@ class Lake:
         if hit is not None:
             return hit
         if not with_rowid:
-            df = self._files_df(name, state, schema)
+            df = self._read_files(name, state, schema)
             inline = self._inline_df(state, schema)
             out = df.unionByName(inline) if inline is not None else df
             self._table_df_put(ckey, out)

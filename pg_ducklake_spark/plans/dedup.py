@@ -358,79 +358,25 @@ _DUCK_SHINGLED = f"""
     """,
 )
 def dedup_ngram_jaccard(spark, sf_dir):
-    """Word-trigram Jaccard near-duplicate pairs (threshold 0.6).
+    """Word-trigram Jaccard near-duplicate pairs (threshold 0.6), from
+    the library operator (operators/dedup.jaccard_pairs).
 
     Candidate pairs come from grouped shingle posting lists (one
     shingle-keyed shuffle, never a cross join); at 100 TB you'd
     pre-filter hot shingles (stopword trigrams) — the posting-list
     length distribution is the scale knob.
     """
+    from pg_ducklake_spark.operators.dedup import jaccard_pairs
+
     docs = t(spark, sf_dir, "documents")
-    shingled = _spark_shingled(docs)
-    # r12 (guide §2.3/§2.4): the per-doc set size is size(shingles),
-    # computed MAP-SIDE before the explode and carried through the
-    # posting list as (doc_id, n) structs. The previous shape persisted
-    # the shingle arrays, aggregated sizes from them in a second
-    # consumer, and joined sizes back onto the pair aggregate twice
-    # (row-count-guarded broadcasts); carrying n costs 8 bytes per
-    # posting entry and deletes the sizes branch, both join stages, the
-    # persist, and the docs.count() guard job outright. Values are
-    # unchanged — same pairs, same inter/union arithmetic.
-    # explode_outer: plain explode pushes a size()>0 filter below the
-    # Generate that re-evaluates the whole shingle expression per row,
-    # interpreted — explode_outer skips that filter; nulls drop after.
-    exploded = shingled.select(
-        "doc_id",
-        F.size("shingles").cast("long").alias("n"),
-        F.explode_outer("shingles").alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    # Grouped posting-list pair enumeration: ONE shuffle keyed on
-    # shingle, then in-group pairs via a nested-sequence explode.
-    # Versus the self-equi-join this drops two exchanges (the mirror
-    # join side and the separate document-frequency pre-count);
-    # singleton shingles emit no pairs, so the lossless unique-tail
-    # pruning is free. The 100 TB guard is a df cap on stopword
-    # shingles (lossy, standard) — omitted here to keep exact oracle
-    # semantics.
-    # Streamed pair enumeration (posexplode + suffix slice): the n^2
-    # pair volume of a hot shingle spreads over n generator rows, never
-    # one n^2-element array in a single row (same fix as
-    # operators/dedup.py — a stopword shingle would OOM a task under
-    # flatten(transform(...))).
-    inter = (
-        exploded.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("dl"))
-        .filter(F.size("dl") >= 2)
-        .select(F.col("dl"), F.posexplode("dl").alias("i", "a"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n").alias("na"),
-            F.explode(F.expr("slice(dl, i + 2, size(dl))")).alias("b"),
-        )
-        .select(
-            "doc_a", "na", F.col("b.doc_id").alias("doc_b"), F.col("b.n").alias("nb")
-        )
-        # r13 (guide §2.3 narrower keys): group on the 2-long pair key
-        # only; na/nb are functionally dependent on doc_a/doc_b, so
-        # max() recovers them exactly while the ~1.27M generated pair
-        # rows hash/compare half the key bytes (interleaved A/B medians
-        # 2.32 -> 2.12 s on the full query).
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max("na").alias("na"),
-            F.max("nb").alias("nb"),
-        )
+    # rebalance before the operator's tokenize+shingle chain (see
+    # _spark_shingled).
+    pairs = jaccard_pairs(
+        rebalance(docs.select("doc_id", "text"), src=docs), "text", "doc_id", 0.6
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.6)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
+    ).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------- MinHash+LSH

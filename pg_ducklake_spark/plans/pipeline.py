@@ -91,23 +91,6 @@ _NORM = "sqrt(" + " + ".join(
     for i in range(1, 65)
 ) + ")"
 
-# Unrolled 64-term dot (0-based Spark indexing) for large corpora —
-# stays in whole-stage codegen, unlike aggregate/zip_with which
-# interprets per element. Small corpora use the interpreted fold (same
-# left-associated double adds, bit-identical value) because the
-# unrolled tree's per-execution codegen source generation costs more
-# than the pair scoring it accelerates — see plans/similarity._use_fold.
-def _spark_dot64(a: str, b: str, fold: bool = False) -> str:
-    if fold:
-        return (
-            f"aggregate(zip_with({a}, {b}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-    return "(" + " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(64)
-    ) + ")"
-
 
 @query(
     "pipe_crossmodal_dup_check",
@@ -157,12 +140,11 @@ def pipe_crossmodal_dup_check(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
     ea = emb.select(F.col("vec_id").alias("doc_a"), F.col("embedding").alias("emb_a"))
     eb = emb.select(F.col("vec_id").alias("doc_b"), F.col("embedding").alias("emb_b"))
-    from pg_ducklake_spark.plans.similarity import _use_fold
+    from pg_ducklake_spark.plans.similarity import _fold_dot
 
-    fold = _use_fold(sf_dir)
-    dot = F.expr(_spark_dot64("emb_a", "emb_b", fold))
-    na = F.sqrt(F.expr(_spark_dot64("emb_a", "emb_a", fold)))
-    nb = F.sqrt(F.expr(_spark_dot64("emb_b", "emb_b", fold)))
+    dot = F.expr(_fold_dot("emb_a", "emb_b"))
+    na = F.sqrt(F.expr(_fold_dot("emb_a", "emb_a")))
+    nb = F.sqrt(F.expr(_fold_dot("emb_b", "emb_b")))
     # The duplicate-pair set is tiny (fingerprint collisions only) —
     # broadcast it, and then the hydrated pa result too, so the
     # embeddings table is read twice map-side and never shuffled; the

@@ -23,6 +23,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pg_ducklake_spark.plans import query, scoped_persist, t
+from pg_ducklake_spark.plans.similarity import _fold_dot
 
 # No rebalance() in this module: the tokenize chains here are light
 # (split/explode feeding broadcast-pruned joins or Zipf-collapsed
@@ -533,17 +534,11 @@ _RRF_DOT_D = _rrf_dot("a.embedding", "b.qe", 1)
 _RRF_NA_D = _rrf_dot("a.embedding", "a.embedding", 1)
 _RRF_NB_D = _rrf_dot("b.qe", "b.qe", 1)
 
-# Spark side: fold form — same left-associated element order and double
-# adds as the unrolled oracle (bit-identical values; see the strategy
-# note in plans/similarity.py: the 64-getItem unrolled chain costs
-# ~0.25 s of driver codegen per execution and still runs slower).
-_RRF_FOLD = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE)"
-    " * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-_RRF_DOT_S = _RRF_FOLD.format(a="emb_a", b="qe")
-_RRF_NA_S = _RRF_FOLD.format(a="emb_a", b="emb_a")
-_RRF_NB_S = _RRF_FOLD.format(a="qe", b="qe")
+# Spark side: the fold form, bit-identical to the unrolled oracle (see
+# the strategy note in plans/similarity.py).
+_RRF_DOT_S = _fold_dot("emb_a", "qe")
+_RRF_NA_S = _fold_dot("emb_a", "emb_a")
+_RRF_NB_S = _fold_dot("qe", "qe")
 
 
 @query(

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from pg_ducklake_spark.functions.hashing import hyperplanes, sql_h32
 from pg_ducklake_spark.plans import query, rebalance, t
-from pg_ducklake_spark.plans.similarity import _DIM, _duck_dot, _FOLD_DOT
+from pg_ducklake_spark.plans.similarity import _DIM, _duck_dot, _fold_dot
 
 # ---------------------------------------------------------------------------
 # SemDeDup: cluster-scoped near-duplicate pruning
@@ -59,7 +59,7 @@ def _spark_sem_cell() -> str:
     entries = []
     for j, c in enumerate(_SEM_CODEBOOK):
         arr = "array(" + ", ".join(f"CAST({x!r} AS DOUBLE)" for x in c) + ")"
-        dot = _FOLD_DOT.format(a="embedding", b=arr)
+        dot = _fold_dot("embedding", arr)
         sim = f"(({dot}) / (nrm * CAST({_SEM_NORMS[j]!r} AS DOUBLE)))"
         entries.append(f"struct({sim} AS sim, CAST({-j} AS BIGINT) AS negcell)")
     return f"array_max(array({', '.join(entries)}))"
@@ -231,7 +231,7 @@ def dedup_semantic_prune(spark, sf_dir):
     normed = emb.withColumn(
         "nrm",
         F.greatest(
-            F.sqrt(F.expr(_FOLD_DOT.format(a="embedding", b="embedding"))),
+            F.sqrt(F.expr(_fold_dot("embedding", "embedding"))),
             F.lit(1e-300),
         ),
     )

@@ -22,39 +22,16 @@ from pg_ducklake_spark.plans import query, rebalance, t
 
 _DIM = 64
 
-# Element-ordered exact dot product / norm, identical across engines.
-# Two physical strategies for the same value:
-#   * aggregate(zip_with(...)) fold: a ~30-node tree that plans in
-#     ~1 ms and evaluates via Spark's specialized higher-order-function
-#     path;
-#   * unrolled 64-term flat sum: nominally codegen-friendly, but the
-#     generated method for a 64-element getItem chain (per-element null
-#     + bounds checks) is so large it blows the JIT inlining budget —
-#     measured 6.4 s vs the fold's 1.7 s on a 1M-pair sweep (200k × 64
-#     corpus, 5 queries), and it also costs ~0.25 s of driver CPU per
-#     execution just generating the source. The fold wins at BOTH ends:
-#     cheaper to plan on small corpora, faster to run on large ones —
-#     so it is the default; the unrolled form is kept for reference and
-#     plan experiments (tools/bench_tune.py).
-# Both are left-associated double adds over the same element order
-# (fold starts at 0.0, and 0.0 + t0 == t0 in IEEE round-to-nearest for
-# every t0 that can arise from a dense embedding), so the emitted
-# doubles are bit-identical to each other and to the oracle.
-
-
-def _use_fold(sf_dir: str) -> bool:
-    """Strategy hook (see block comment): the fold measured faster at
-    every corpus size tried, so it is unconditional; kept as a function
-    so bench experiments can monkeypatch the choice."""
-    return True
-
-
-# Fold over arrays already cast to double (see sim_bruteforce_topk):
-# per-pair work is a bare multiply-add.
-_DFOLD_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-)
+# Element-ordered exact dot product, identical across engines. Spark
+# folds with aggregate(zip_with(...)): a ~30-node tree that plans in ~1 ms.
+# An unrolled 64-term sum is slower at both ends — 6.4 s vs 1.7 s on a
+# 1M-pair sweep (200k × 64 corpus, 5 queries), because its generated
+# method (per-element null + bounds checks) blows the JIT inlining
+# budget, plus ~0.25 s of driver CPU per execution to generate it — and
+# an 8-plane × 64-term CASE exceeds the JVM's 64 KB method limit. The
+# fold is a left-associated double add over the oracle's element order
+# from an exact 0.0 seed (0.0 + t0 == t0 in IEEE round-to-nearest), so
+# the emitted doubles are bit-identical.
 
 
 def _fold_dot(a: str, b: str) -> str:
@@ -65,27 +42,11 @@ def _fold_dot(a: str, b: str) -> str:
     )
 
 
-def _spark_dot(a: str, b: str, fold: bool = False) -> str:
-    if fold:
-        return _fold_dot(a, b)
-    terms = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(_DIM)
-    )
-    return f"({terms})"
-
-
 def _duck_dot(a: str, b: str) -> str:
     terms = " + ".join(
         f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, _DIM + 1)
     )
     return f"({terms})"
-
-
-def _spark_cosine(a: str, b: str) -> str:
-    dot = _spark_dot(a, b)
-    na = _spark_dot(a, a)
-    nb = _spark_dot(b, b)
-    return f"({dot}) / (sqrt({na}) * sqrt({nb}))"
 
 
 def _duck_cosine(a: str, b: str) -> str:
@@ -136,22 +97,11 @@ def sim_bruteforce_topk(spark, sf_dir):
 _PLANES = hyperplanes(8, _DIM)
 
 
-# Fold-based on purpose: unrolling 8 planes × 64 terms into one CASE
-# expression exceeds the JVM's 64 KB method limit, killing whole-stage
-# codegen for the entire stage (worse than the interpreted fold). The
-# fold's 0.0 seed leaves the sum bit-identical to the oracle's unrolled
-# left-associated terms.
-_FOLD_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-
-
 def _spark_bucket(col: str) -> str:
     bits = []
     for j, plane in enumerate(_PLANES):
         arr = "array(" + ", ".join(f"CAST({c!r} AS DOUBLE)" for c in plane) + ")"
-        dot = _FOLD_DOT.format(a=col, b=arr)
+        dot = _fold_dot(col, arr)
         bits.append(f"CASE WHEN ({dot}) >= 0 THEN {1 << j} ELSE 0 END")
     return "(" + " + ".join(bits) + ")"
 
@@ -199,7 +149,7 @@ def sim_lsh_bucket_topk(spark, sf_dir):
     the bucket id — the shape that scales to billions of vectors."""
     emb = rebalance(t(spark, sf_dir, "embeddings"))
     bucketed = emb.withColumn("bucket", F.expr(_spark_bucket("embedding"))).withColumn(
-        "nrm", F.sqrt(F.expr(_spark_dot("embedding", "embedding", fold=_use_fold(sf_dir))))
+        "nrm", F.sqrt(F.expr(_fold_dot("embedding", "embedding")))
     )
     queries = bucketed.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
@@ -214,7 +164,7 @@ def sim_lsh_bucket_topk(spark, sf_dir):
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
             (
-                F.expr(_spark_dot("q_emb", "embedding", fold=_use_fold(sf_dir)))
+                F.expr(_fold_dot("q_emb", "embedding"))
                 / (F.col("q_nrm") * F.col("nrm"))
             ).alias("cosine"),
         )
@@ -317,7 +267,7 @@ def sim_embedding_near_dup(spark, sf_dir):
     _W = 0.0448  # > sqrt(0.002): kept pairs differ by ≤ 1 bucket
     emb = t(spark, sf_dir, "embeddings")
     normed = emb.withColumn(
-        "nrm", F.sqrt(F.expr(_spark_dot("embedding", "embedding", fold=_use_fold(sf_dir))))
+        "nrm", F.sqrt(F.expr(_fold_dot("embedding", "embedding")))
     ).withColumn(
         # unit-vector prefix, computed once per ROW (not per pair)
         "unit8",
@@ -396,7 +346,7 @@ def sim_embedding_near_dup(spark, sf_dir):
         F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    cosine = F.expr(_spark_dot("emb_a", "emb_b", fold=_use_fold(sf_dir))) / (
+    cosine = F.expr(_fold_dot("emb_a", "emb_b")) / (
         F.col("nrm_a") * F.col("nrm_b")
     )
     # The threshold filter needs its own fence: unfenced it is pushed
@@ -540,19 +490,6 @@ for _c in _CODEBOOK:
     for _x in _c:
         _acc += _x * _x
     _CODE_NORMS.append(_acc**0.5)
-
-
-def _spark_cell_struct() -> str:
-    """array_max over (sim, -cell) structs: max cosine, ties to the
-    smallest cell — evaluated map-side, zero shuffle (same layout as
-    operators/ivf._assign)."""
-    entries = []
-    for j, c in enumerate(_CODEBOOK):
-        arr = "array(" + ", ".join(f"CAST({x!r} AS DOUBLE)" for x in c) + ")"
-        dot = _FOLD_DOT.format(a="embedding", b=arr)
-        sim = f"(({dot}) / (nrm * CAST({_CODE_NORMS[j]!r} AS DOUBLE)))"
-        entries.append(f"struct({sim} AS sim, CAST({-j} AS BIGINT) AS negcell)")
-    return f"array_max(array({', '.join(entries)}))"
 
 
 def _duck_cell_sims(col: str) -> list[str]:

@@ -78,3 +78,27 @@ def test_tagged_rebalance_queries_on_stock_session():
     )
     for name in PLAIN_SESSION_SAMPLE:
         assert f"PLAIN_OK {name}" in proc.stdout, f"{name} did not complete"
+
+
+# ``get_spark`` differs from the stock session only in confs: it runs the
+# stock py4j/PySpark client, never a patched copy of it.
+
+
+def test_get_spark_runs_the_stock_client(spark):
+    import py4j.clientserver as cs
+    import pyspark.sql.classic.column as cc
+    import pyspark.sql.functions.builtin as builtin
+
+    for fn, module in (
+        (builtin._get_jvm_function, "pyspark.sql.functions.builtin"),
+        (cc._to_seq, "pyspark.sql.classic.column"),
+        (cs.ClientServerConnection.connect_to_java_server, "py4j.clientserver"),
+    ):
+        assert fn.__module__ == module, f"{fn.__qualname__} replaced by {fn.__module__}"
+
+
+def test_dataframe_debugging_disabled_in_session(spark):
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled", "true")
+        == "false"
+    )
